@@ -47,6 +47,12 @@ def format_tab_kv(pairs: Iterable[tuple[str, str]]) -> Iterator[str]:
         yield f"{k}\t{v}"
 
 
+# Declared, not inferred: inferring runs an extra Spark job over the reducer
+# output, and fails with "RDD is empty" when the reducers emit nothing
+# (GridMR writes an empty final.txt then).
+_OUT_SCHEMA = "value string"
+
+
 def _as_lines_rdd(spark: SparkSession, source: DataFrame | RDD | str) -> RDD:
     if isinstance(source, str):
         return spark.sparkContext.textFile(source)
@@ -78,7 +84,7 @@ def run_job(
     out = partitioned.mapPartitions(
         lambda it: reduce_fn(iter(f"{k}\t{v}" for k, v in it))
     )
-    return out.map(lambda line: (line,)).toDF(["value"])
+    return out.map(lambda line: (line,)).toDF(_OUT_SCHEMA)
 
 
 def pipe_job(
@@ -97,7 +103,7 @@ def pipe_job(
     kv = lines.pipe(map_cmd).mapPartitions(parse_tab_kv)
     partitioned = kv.partitionBy(max(1, n_reducers))
     out = partitioned.map(lambda kvp: f"{kvp[0]}\t{kvp[1]}").pipe(reduce_cmd)
-    return out.map(lambda line: (line,)).toDF(["value"])
+    return out.map(lambda line: (line,)).toDF(_OUT_SCHEMA)
 
 
 def wordcount_map(line: str) -> Iterator[str]:

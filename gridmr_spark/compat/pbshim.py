@@ -28,9 +28,14 @@ Two subtleties discovered the hard way:
   ``sitecustomize`` from ``sys.path``). ``ensure_protobuf()`` wires both:
   the current process immediately, future workers via the environment.
 
-This is a compatibility seam for THIS container, not a vendored copy —
-nothing is copied into the repo; on any normally-provisioned cluster
-(`pip install protobuf`) the shim is a no-op.
+The same worker bootstrap also stops every Python task from re-reading the
+unchanged pyspark.zip / Spark jar directories on CPython < 3.13 (see its
+docstring). That part does not depend on protobuf, so ``ensure_protobuf()``
+exports the directory to workers whether or not a runtime resolves.
+
+The protobuf half is a compatibility seam for hosts without a protobuf
+install, not a vendored copy — nothing is copied into the repo; on any
+normally-provisioned cluster (`pip install protobuf`) it is a no-op.
 """
 
 from __future__ import annotations
@@ -116,8 +121,11 @@ def _bootstrap_current_process() -> bool:
 
 
 def ensure_protobuf() -> bool:
-    """Bootstrap the current process AND export the shim to future Python
-    workers. Two channels, because the JVM may already be running:
+    """Bootstrap the current process AND export the worker bootstrap
+    (``_pbshim_path``) to future Python workers. The export happens even
+    when no protobuf runtime resolves: the bootstrap's zip directory reuse
+    helps every Python task regardless. Two channels, because the JVM may
+    already be running:
 
     - os.environ PYTHONPATH: covers workers of any SparkSession whose JVM
       starts AFTER this call (the session factory calls this pre-build).
@@ -127,9 +135,10 @@ def ensure_protobuf() -> bool:
       worker's — which covers the driver-gate scenario where an outside
       harness built the session before importing this repo.
 
+    Returns True iff a protobuf runtime imports in this process.
     Idempotent."""
     ok = _bootstrap_current_process()
-    if not ok or not os.path.isfile(os.path.join(_SHIM_PATH_DIR, "sitecustomize.py")):
+    if not os.path.isfile(os.path.join(_SHIM_PATH_DIR, "sitecustomize.py")):
         return ok
     parts = os.environ.get("PYTHONPATH", "").split(os.pathsep)
     if _SHIM_PATH_DIR not in parts:

@@ -41,10 +41,12 @@ def get_spark(app_name: str = "gridmr_spark", cpus: int | None = None) -> SparkS
     # cluster deployment) can still override from the outside.
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    # Before the JVM starts: make a protobuf runtime importable (current
-    # process + future Python workers via PYTHONPATH) so the
-    # transformWithStateInPandas state server can run. No-op when protobuf
-    # is properly installed or no vendored runtime exists.
+    # Before the JVM starts: put the worker bootstrap on future Python
+    # workers' PYTHONPATH (it stops each task re-reading pyspark.zip and
+    # the Spark jar on CPython < 3.13) and make a protobuf runtime
+    # importable so the transformWithStateInPandas state server can run.
+    # The protobuf part is a no-op when protobuf is properly installed or
+    # no vendored runtime exists.
     from gridmr_spark.compat.pbshim import ensure_protobuf
 
     ensure_protobuf()

@@ -92,6 +92,21 @@ def test_pipe_job_with_real_executables(spark, tmp_path):
     assert counts == {"hello": 2, "world": 2, "of": 1, "spark": 1}
 
 
+def test_tabless_map_output_gives_empty_result(spark):
+    """A mapper that emits no tab-separated key/value line leaves every
+    reducer with empty input; GridMR then writes an empty final.txt. Both
+    APIs must return an empty DataFrame[value: string], not fail on
+    schema inference over an empty RDD."""
+    data = spark.createDataFrame([("no tab here",), ("nor here",)], ["value"])
+    outs = [
+        run_job(spark, data, lambda line: [line], wordcount_reduce, n_reducers=2),
+        pipe_job(spark, data, "cat", "cat", n_reducers=2),
+    ]
+    for out in outs:
+        assert out.schema.simpleString() == "struct<value:string>"
+        assert out.collect() == []
+
+
 def test_sources_roundtrip(spark, tmp_path):
     from gridmr_spark import sources
 
